@@ -37,20 +37,6 @@ object Traversals {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
     }.toSet
 
-  /** Drop the storage blocks behind a SUPERSEDED eager
-    * `localCheckpoint`. Every iterative operator here re-checkpoints
-    * its state table per superstep; without an explicit drop the
-    * superseded blocks linger until the ContextCleaner's next GC
-    * cycle, so a k-superstep run holds k copies of the state table in
-    * block storage — harmless at test SF, but at 100 TB (or in a
-    * long bench/verify session on a small heap) that accumulation
-    * evicts useful blocks and forces execution-memory spills. Only
-    * call on checkpoints wholly replaced by an already-materialised
-    * successor (`eager = true`): unpersisting a localCheckpoint a
-    * live plan still reads would be unrecoverable (lineage is
-    * truncated). `keep` exempts blocks shared with a still-live
-    * DataFrame (e.g. BFS's current frontier inside the old visited
-    * union). */
   /** Eager localCheckpoint + stats reset ([[graftshim.Bridge
     * .resetCheckpointStats]]): `Dataset.localCheckpoint` inherits the
     * pre-checkpoint size ESTIMATE, and the size-only estimator
@@ -66,6 +52,20 @@ object Traversals {
         df.localCheckpoint(eager = true))
   }
 
+  /** Drop the storage blocks behind a SUPERSEDED eager
+    * `localCheckpoint`. Every iterative operator here re-checkpoints
+    * its state table per superstep; without an explicit drop the
+    * superseded blocks linger until the ContextCleaner's next GC
+    * cycle, so a k-superstep run holds k copies of the state table in
+    * block storage — harmless at test SF, but at 100 TB (or in a
+    * long bench/verify session on a small heap) that accumulation
+    * evicts useful blocks and forces execution-memory spills. Only
+    * call on checkpoints wholly replaced by an already-materialised
+    * successor (`eager = true`): unpersisting a localCheckpoint a
+    * live plan still reads would be unrecoverable (lineage is
+    * truncated). `keep` exempts blocks shared with a still-live
+    * DataFrame (e.g. BFS's current frontier inside the old visited
+    * union). */
   private[graft] def dropCheckpoint(df: DataFrame, keep: Set[Int] = Set.empty): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD
@@ -88,41 +88,12 @@ object Traversals {
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Level-synchronous BFS: `(vertex: Long, level: Int)` for every vertex
-    * reachable from `start` (start itself at level 0). Level = shortest
-    * hop distance, because a vertex joins the visited set the first
-    * level it is reached. */
   /** Frontier rows below this bound are broadcast to the edge side;
     * above it the superstep falls back to a shuffle hash join against
     * the (persisted, src-partitioned) edges — force-broadcasting an
     * O(V) mid-BFS frontier would ship the whole frontier to every
     * executor. */
   val broadcastFrontierMax: Long = 500000L
-
-  def bfsLevels(edges: DataFrame, start: Long, maxLevels: Int = 10000): DataFrame = {
-    // Materialise the (possibly derived/unioned) edge table ONCE,
-    // hash-partitioned by src so non-broadcast supersteps reuse the
-    // partitioning instead of reshuffling edges every level.
-    val e = partitionEdges(edges)
-    try bfsLevelsPrepared(e, start, maxLevels)
-    finally e.unpersist(blocking = false)
-  }
-
-  /** Multi-source BFS: level(v) = min hop distance from ANY start
-    * (landmark-distance shape). Same superstep loop, seeded with the
-    * whole start set at level 0. */
-  def bfsLevelsMulti(edges: DataFrame, starts: Seq[Long], maxLevels: Int = 10000): DataFrame = {
-    val e = partitionEdges(edges)
-    try bfsLevelsPrepared(e, starts, maxLevels)
-    finally e.unpersist(blocking = false)
-  }
-
-  /** [[bfsLevels]] over an edge table the CALLER already normalised and
-    * persisted via [[partitionEdges]] — for running many traversals
-    * over one graph without re-shuffling/re-caching per call (the
-    * shared table is NOT unpersisted here). */
-  def bfsLevelsPrepared(e: DataFrame, start: Long, maxLevels: Int): DataFrame =
-    bfsLevelsPrepared(e, Seq(start), maxLevels)
 
   /** Edge-count bound for the driver-local BFS fast path: covers the
     * reference's whole graph envelope (≤100 vertices, dense adjacency
@@ -134,56 +105,44 @@ object Traversals {
     * the distributed level loop runs unchanged. */
   val bfsLocalMaxEdges: Long = 16384L
 
-  def bfsLevelsPrepared(e: DataFrame, starts: Seq[Long], maxLevels: Int): DataFrame =
-    bfsLevelsPrepared(e, starts, maxLevels, bfsLocalMaxEdges)
+  /** One BSP superstep of the frontier loop: expand the `(key*,
+    * vertex)` frontier (`size` rows) one hop along `e`, drop what
+    * `visited` already holds for the same key, and pin the result —
+    * the caller owns the returned checkpoint. */
+  private def expandFrontier(e: DataFrame, frontier: DataFrame, size: Long,
+                             visited: DataFrame, keys: Seq[String] = Nil): DataFrame = {
+    val f = if (size <= broadcastFrontierMax) frontier.hint("broadcast") else frontier
+    f.join(e, f("vertex") === e("src"))
+      .select(keys.map(f(_)) :+ e("dst").as("vertex"): _*).distinct()
+      .join(visited, keys :+ "vertex", "left_anti")
+      .checkpointSized() // cut lineage growth per iteration
+  }
 
-  def bfsLevelsPrepared(e: DataFrame, starts: Seq[Long], maxLevels: Int,
-                        localMaxEdges: Long): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    require(starts.nonEmpty, "at least one start vertex")
-    // Tiny-graph fast path: identical (vertex, min-hop level) output,
-    // computed in one pass on the driver. The count also materialises
-    // the persisted edge cache, which the distributed loop's first
-    // superstep would otherwise pay.
-    if (e.count() <= localMaxEdges) {
-      val adj = e.select(col("src").cast("long"), col("dst").cast("long"))
-        .as[(Long, Long)].collect()
-        .groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
-      val lvl = scala.collection.mutable.LinkedHashMap[Long, Int](
-        starts.distinct.map(_ -> 0): _*)
-      var frontier = starts.distinct
-      var level = 0
-      while (frontier.nonEmpty && level < maxLevels) {
-        level += 1
-        frontier = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long]))
-          .distinct.filterNot(lvl.contains)
-        frontier.foreach(v => lvl(v) = level)
-      }
-      return lvl.toSeq.toDF("vertex", "level")
-    }
-    var visited = starts.distinct.map((_, 0)).toDF("vertex", "level")
-      .checkpointSized()
-    var frontier = visited.select("vertex")
+  /** The distributed level-synchronous frontier loop behind every
+    * BFS-shaped operator. `seeds` is a checkpointed `(key*, vertex,
+    * level = 0)` table of `seedCount` rows; each superstep is one
+    * [[expandFrontier]], and the rows it finds join the visited set
+    * at the next level. A vertex joins the visited set the first level
+    * it is reached, so level = min hop distance. Keys (e.g. `root`)
+    * run independent searches side by side in the same supersteps.
+    * Output `(key*, vertex, level)`. */
+  private def frontierLevels(e: DataFrame, seeds: DataFrame, seedCount: Long,
+                             maxLevels: Int, keys: Seq[String] = Nil): DataFrame = {
+    val kv = (keys :+ "vertex").map(col)
+    var visited = seeds
+    var frontier = visited.select(kv: _*)
     var level = 0
     var sinceCompact = 0
-    var frontierSize = starts.distinct.length.toLong
+    var frontierSize = seedCount
     while (frontierSize > 0 && level < maxLevels) {
       level += 1
-      // One BSP superstep: expand frontier along edges, drop already-seen.
-      val f = if (frontierSize <= broadcastFrontierMax) frontier.hint("broadcast")
-              else frontier
-      val next = f
-        .join(e, f("vertex") === e("src"))
-        .select(e("dst").as("vertex")).distinct()
-        .join(visited, Seq("vertex"), "left_anti")
-        .checkpointSized() // cut lineage growth per iteration
+      val next = expandFrontier(e, frontier, frontierSize, visited, keys)
       frontierSize = next.count()
       if (frontierSize > 0) {
         // visited stays a lazy union of already-checkpointed frontiers —
         // no O(|visited|) copy per level; compact every 8 levels so deep
         // graphs keep bounded plan depth
-        visited = visited.union(next.select(col("vertex"), lit(level).as("level")))
+        visited = visited.union(next.select(kv :+ lit(level).as("level"): _*))
         sinceCompact += 1
         if (sinceCompact >= 8) {
           val old = visited
@@ -199,6 +158,72 @@ object Traversals {
       }
     }
     visited
+  }
+
+  /** Driver-local twin of [[frontierLevels]] over a collected edge
+    * array: vertex → min hop level from `starts` (level 0), in visit
+    * order (seeds, then each level in expansion order). The fast path
+    * of every BFS-shaped operator below its bounded-collect bound. */
+  private def localBfs(raw: Array[(Long, Long)], starts: Seq[Long],
+      maxLevels: Int = Int.MaxValue): scala.collection.mutable.LinkedHashMap[Long, Int] = {
+    val adj = raw.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
+    val lvl = scala.collection.mutable.LinkedHashMap[Long, Int](starts.distinct.map(_ -> 0): _*)
+    var frontier = starts.distinct
+    var level = 0
+    while (frontier.nonEmpty && level < maxLevels) {
+      level += 1
+      frontier = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long]))
+        .distinct.filterNot(lvl.contains)
+      frontier.foreach(v => lvl(v) = level)
+    }
+    lvl
+  }
+
+  /** `(src, dst)` of `e` as longs, collected to the driver. */
+  private def collectEdges(e: DataFrame): Array[(Long, Long)] = {
+    import e.sparkSession.implicits._
+    e.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)].collect()
+  }
+
+  /** Level-synchronous BFS: `(vertex: Long, level: Int)` for every vertex
+    * reachable from `start` (start itself at level 0). Level = shortest
+    * hop distance, because a vertex joins the visited set the first
+    * level it is reached. */
+  def bfsLevels(edges: DataFrame, start: Long, maxLevels: Int = 10000): DataFrame =
+    bfsLevelsMulti(edges, Seq(start), maxLevels)
+
+  /** Multi-source BFS: level(v) = min hop distance from ANY start
+    * (landmark-distance shape). Same superstep loop, seeded with the
+    * whole start set at level 0. */
+  def bfsLevelsMulti(edges: DataFrame, starts: Seq[Long], maxLevels: Int = 10000): DataFrame = {
+    // Materialise the (possibly derived/unioned) edge table ONCE,
+    // hash-partitioned by src so non-broadcast supersteps reuse the
+    // partitioning instead of reshuffling edges every level.
+    val e = partitionEdges(edges)
+    try bfsLevelsPrepared(e, starts, maxLevels)
+    finally e.unpersist(blocking = false)
+  }
+
+  /** [[bfsLevelsMulti]] over an edge table the CALLER already
+    * normalised and persisted via [[partitionEdges]] — for running many
+    * traversals over one graph without re-shuffling/re-caching per call
+    * (the shared table is NOT unpersisted here). Graphs of at most
+    * `localMaxEdges` edges take the driver-local path. */
+  def bfsLevelsPrepared(e: DataFrame, starts: Seq[Long], maxLevels: Int = 10000,
+                        localMaxEdges: Long = bfsLocalMaxEdges): DataFrame = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    require(starts.nonEmpty, "at least one start vertex")
+    val seeds = starts.distinct
+    // Tiny-graph fast path: identical (vertex, min-hop level) output,
+    // computed in one pass on the driver. The count also materialises
+    // the persisted edge cache, which the distributed loop's first
+    // superstep would otherwise pay.
+    if (e.count() <= localMaxEdges)
+      return localBfs(collectEdges(e), seeds, maxLevels).toSeq.toDF("vertex", "level")
+    // the seed frontier's size is known on the driver: no count job
+    frontierLevels(e, seeds.map((_, 0)).toDF("vertex", "level").checkpointSized(),
+      seeds.length.toLong, maxLevels)
   }
 
   /** Per-root hop distances from a SET of root vertices — the
@@ -219,39 +244,11 @@ object Traversals {
                            maxLevels: Int = 10000): DataFrame = {
     val e = partitionEdges(edges)
     try {
-      var visited = roots.select(col("root").cast("long"))
+      val seeds = roots.select(col("root").cast("long"))
         .distinct()
         .select(col("root"), col("root").as("vertex"), lit(0).as("level"))
         .checkpointSized()
-      var frontier = visited.select("root", "vertex")
-      var level = 0
-      var sinceCompact = 0
-      var frontierSize = frontier.count()
-      while (frontierSize > 0 && level < maxLevels) {
-        level += 1
-        val f = if (frontierSize <= broadcastFrontierMax) frontier.hint("broadcast")
-                else frontier
-        val next = f
-          .join(e, f("vertex") === e("src"))
-          .select(f("root"), e("dst").as("vertex")).distinct()
-          .join(visited, Seq("root", "vertex"), "left_anti")
-          .checkpointSized()
-        frontierSize = next.count()
-        if (frontierSize > 0) {
-          visited = visited.union(
-            next.select(col("root"), col("vertex"), lit(level).as("level")))
-          sinceCompact += 1
-          if (sinceCompact >= 8) {
-            val old = visited
-            visited = visited.checkpointSized(); sinceCompact = 0
-            dropCheckpoint(old, keep = checkpointRddIds(next))
-          }
-          frontier = next
-        } else {
-          dropCheckpoint(next)
-        }
-      }
-      visited
+      frontierLevels(e, seeds, seeds.count(), maxLevels, keys = Seq("root"))
     } finally e.unpersist(blocking = false)
   }
 
@@ -308,6 +305,24 @@ object Traversals {
     else out
   }
 
+  /** Replay inputs above this edge count abort with a clear error
+    * instead of a driver OOM (the reference contract bounds graphs at
+    * n=100; this guard is ~4 orders of magnitude above that). 5 M
+    * edges ≈ 80 MB collected — safe on any plausible driver heap,
+    * where the previous 50 M default permitted an ~800 MB collect
+    * before the guard tripped (r10 VERDICT watch item). Callers with
+    * a big driver opt in per call via `maxReplayEdges`. */
+  val dfsReplayMaxEdges: Long = 5000000L
+
+  /** The [[dfsLeaves]] r13 replay-input reduction on a collected edge
+    * array: reachable-src, self-loop-free, not-into-start, deduped —
+    * exactly the distributed reduction's row set. */
+  private def localReducedAdjacency(raw: Array[(Long, Long)],
+      start: Long): Array[(Long, Long)] = {
+    val reach = localBfs(raw, Seq(start)).keySet
+    raw.filter { case (s, d0) => s != d0 && d0 != start && reach(s) }.distinct
+  }
+
   /** Reference op=3: leaf nodes of the DFS tree from `start`
     * (`secondary_server.c:142-176`). A vertex is a leaf iff its DFS
     * expansion finds no unvisited neighbor (checked incrementally in
@@ -323,39 +338,6 @@ object Traversals {
     * phase 1 bounds phase 2's input to the component actually reached.
     * Output: `(vertex: Long)` ascending.
     */
-  /** Replay inputs above this edge count abort with a clear error
-    * instead of a driver OOM (the reference contract bounds graphs at
-    * n=100; this guard is ~4 orders of magnitude above that). 5 M
-    * edges ≈ 80 MB collected — safe on any plausible driver heap,
-    * where the previous 50 M default permitted an ~800 MB collect
-    * before the guard tripped (r10 VERDICT watch item). Callers with
-    * a big driver opt in per call via `maxReplayEdges`. */
-  val dfsReplayMaxEdges: Long = 5000000L
-
-  /** Driver-local reachability (directed BFS vertex set) over a
-    * collected edge array — the dense-local twin of [[bfsLevels]]'
-    * fast path, shared by the DFS local paths below. */
-  private def localReach(raw: Array[(Long, Long)], start: Long): Set[Long] = {
-    val adj = raw.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
-    val seen = scala.collection.mutable.Set(start)
-    var frontier = Seq(start)
-    while (frontier.nonEmpty) {
-      frontier = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long]))
-        .distinct.filterNot(seen.contains)
-      seen ++= frontier
-    }
-    seen.toSet
-  }
-
-  /** The [[dfsLeaves]] r13 replay-input reduction on a collected edge
-    * array: reachable-src, self-loop-free, not-into-start, deduped —
-    * exactly the distributed reduction's row set. */
-  private def localReducedAdjacency(raw: Array[(Long, Long)],
-      start: Long): Array[(Long, Long)] = {
-    val reach = localReach(raw, start)
-    raw.filter { case (s, d0) => s != d0 && d0 != start && reach(s) }.distinct
-  }
-
   def dfsLeaves(edges: DataFrame, start: Long,
                 maxReplayEdges: Long = dfsReplayMaxEdges,
                 localMaxEdges: Long = GraphAlgos.denseLocalMaxEdges): DataFrame = {
@@ -511,7 +493,7 @@ object Traversals {
     dfsLeafClassesOn(ePart, start)
 
   private def dfsLeafClassesOn(ePart: DataFrame, start: Long): DataFrame = {
-    val reach = bfsLevelsPrepared(ePart, start, 10000)
+    val reach = bfsLevelsPrepared(ePart, Seq(start))
       .select("vertex").checkpointSized()
     // reachable-src, deduped edge set (self-loops already dropped by
     // the caller); every dst is then reachable too (one BFS step from
@@ -547,6 +529,29 @@ object Traversals {
     dropCheckpoint(reach)
     dropCheckpoint(e)
     pinned
+  }
+
+  /** The [[dfsLeafClasses]] order-invariant rules on a collected edge
+    * array — (vertex, cls) for every reachable vertex, identical
+    * labels to the distributed aggregation. */
+  private def localLeafClasses(raw: Array[(Long, Long)],
+      start: Long): Seq[(Long, String)] = {
+    val reach = localBfs(raw, Seq(start)).keySet
+    val e = raw.filter { case (s, d0) => s != d0 && reach(s) }.distinct
+    val ex = e.filter(_._2 != start)
+    val hasOut = ex.map(_._1).toSet
+    val onlyParents = ex.groupBy(_._2).collect {
+      case (_, ins) if ins.length == 1 => ins.head._1
+    }.toSet
+    val internals =
+      onlyParents ++ (if (hasOut(start)) Set(start) else Set.empty[Long])
+    reach.toSeq.sorted.map { v =>
+      val cls =
+        if (!hasOut(v)) "leaf"
+        else if (internals(v)) "internal"
+        else "undecided"
+      (v, cls)
+    }
   }
 
   /** [[dfsLeafClasses]] with the `undecided` residue SETTLED exactly
@@ -585,29 +590,6 @@ object Traversals {
     * callers keep the rule classes (with `undecided` as the measured
     * residue) via [[dfsLeafClasses]]. When no vertex is undecided the
     * replay is skipped outright. */
-  /** The [[dfsLeafClasses]] order-invariant rules on a collected edge
-    * array — (vertex, cls) for every reachable vertex, identical
-    * labels to the distributed aggregation. */
-  private def localLeafClasses(raw: Array[(Long, Long)],
-      start: Long): Seq[(Long, String)] = {
-    val reach = localReach(raw, start)
-    val e = raw.filter { case (s, d0) => s != d0 && reach(s) }.distinct
-    val ex = e.filter(_._2 != start)
-    val hasOut = ex.map(_._1).toSet
-    val onlyParents = ex.groupBy(_._2).collect {
-      case (_, ins) if ins.length == 1 => ins.head._1
-    }.toSet
-    val internals =
-      onlyParents ++ (if (hasOut(start)) Set(start) else Set.empty[Long])
-    reach.toSeq.sorted.map { v =>
-      val cls =
-        if (!hasOut(v)) "leaf"
-        else if (internals(v)) "internal"
-        else "undecided"
-      (v, cls)
-    }
-  }
-
   def dfsLeafResidual(edges: DataFrame, start: Long,
                       maxResidualEdges: Long = dfsReplayMaxEdges,
                       maxReduceRounds: Int = 30,
@@ -905,6 +887,16 @@ object Traversals {
     dists
   }
 
+  /** Phase wall-times of the most recent [[pageRankDeterministic]] run
+    * in this JVM: (phase name, seconds) for the edge/vertex staging
+    * pass and each fused-superstep segment's materialization. Written
+    * on every run; read by Bench so the artifact records WHERE a slow
+    * pagerank execution spent its time (staging scan vs superstep
+    * barriers) — the in-artifact evidence that separates host CPU
+    * steal from a plan regression (r11 VERDICT item 2). */
+  private[graft] val lastPageRankPhases =
+    new java.util.concurrent.atomic.AtomicReference[Seq[(String, Double)]](Nil)
+
   /** Deterministic PageRank (fixed iteration count): the standard
     * recurrence rank' = reset + (1-reset)·Σ rank(u)/outdeg(u), with
     * each edge contribution converted to an exact fixed-point long at
@@ -917,16 +909,6 @@ object Traversals {
     * iteration: one vertex-keyed join + one hash agg; lineage cut by
     * localCheckpoint. Input directed `(src, dst)`; every edge endpoint
     * is a vertex. */
-  /** Phase wall-times of the most recent [[pageRankDeterministic]] run
-    * in this JVM: (phase name, seconds) for the edge/vertex staging
-    * pass and each fused-superstep segment's materialization. Written
-    * on every run; read by Bench so the artifact records WHERE a slow
-    * pagerank execution spent its time (staging scan vs superstep
-    * barriers) — the in-artifact evidence that separates host CPU
-    * steal from a plan regression (r11 VERDICT item 2). */
-  private[graft] val lastPageRankPhases =
-    new java.util.concurrent.atomic.AtomicReference[Seq[(String, Double)]](Nil)
-
   def pageRankDeterministic(edges: DataFrame, iters: Int = 10,
                             reset: Double = 0.15): DataFrame = {
     val eo = pageRankEdgeTable(edges)
@@ -965,6 +947,44 @@ object Traversals {
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
+  /** The vertex set of a [[pageRankEdgeTable]], pinned. Every edge's
+    * src has odeg >= 1 by construction, so the inner join drops no edge
+    * row — the table's endpoint set IS the vertex set, and deriving it
+    * from the cache spares another pass over the input edges. */
+  private def edgeTableVertices(eo: DataFrame): DataFrame =
+    eo.select(col("src").as("vertex"))
+      .union(eo.select(col("dst").as("vertex"))).distinct()
+      .checkpointSized()
+
+  /** Exact per-group Σ w over `(key*, w)` rows: the contribution sum of
+    * every PageRank superstep. Each w becomes a PRIMITIVE fixed-point
+    * long (`fixed18`: exact binary value rounded half-up at 1e-18 — see
+    * FixedPoint's value contract), split hi/lo by `SplitMod` so
+    * per-group partial sums stay exact without 128-bit state: the hash
+    * agg is then pure Tungsten long addition instead of a
+    * decimal(38,18) sum whose every add allocates BigDecimals (r13:
+    * 9–28 s of task GC in the big superstep stages was this allocation
+    * pressure). The rare |w| ≥ 9 contribution (a rank ≥ 9·odeg hub)
+    * falls back to the exact decimal cast (`wbig`) and is recombined
+    * exactly per group by `fixed_combine`. The sum is
+    * accumulation-order independent, so ranks are bit-identical on any
+    * partitioning. Output `(key*, m)`. */
+  private def fixedPointSum(rows: DataFrame, keys: String*): DataFrame = {
+    graft.functions.expressions.GraftFunctions.register(rows.sparkSession)
+    val splitMod = graft.functions.expressions.FixedPoint.SplitMod
+    val k = keys.map(col)
+    rows.select(k :+ expr("fixed18(w)").as("u") :+ col("w"): _*)
+      .select(k :+ col("u") :+ when(col("u").isNull && col("w").isNotNull,
+        col("w").cast("decimal(38,18)")).as("wbig"): _*)
+      .groupBy(k: _*)
+      .agg(sum(expr(s"u div $splitMod")).as("shi"),
+           sum(expr(s"u % $splitMod")).as("slo"),
+           sum(col("wbig")).as("sbig"))
+      // coalesce: a group whose every contribution took the decimal
+      // fallback leaves the long sums NULL
+      .select(k :+ expr("fixed_combine(coalesce(shi, 0L), coalesce(slo, 0L), sbig)").as("m"): _*)
+  }
+
   /** [[pageRankDeterministic]] over an ALREADY staged
     * [[pageRankEdgeTable]] — the input's cache blocks are never
     * released here, so a memoizing caller keeps serving them across
@@ -978,14 +998,7 @@ object Traversals {
       phases += name -> (System.nanoTime() - t0) / 1e9
       res
     }
-    // every edge's src has odeg >= 1 by construction, so the inner
-    // join drops no edge row — eo's endpoint set IS the vertex set,
-    // and deriving it from the cache spares a third pass over `edges`
-    val verts = phase("stage_edges_verts") {
-      eo.select(col("src").as("vertex"))
-        .union(eo.select(col("dst").as("vertex"))).distinct()
-        .checkpointSized()
-    }
+    val verts = phase("stage_edges_verts") { edgeTableVertices(eo) }
     // Missing-vertex fill by UNION, not by a per-iteration left-outer
     // rebuild join: a zero-contribution row per vertex rides into the
     // same hash agg that sums the edge contributions, so each
@@ -995,10 +1008,7 @@ object Traversals {
     // m = 0 exactly as coalesce(null, 0.0) did — the oracle contract
     // is unchanged. Fewer barriers per superstep is also the
     // noisy-host story: less steal surface under suite load.
-    graft.functions.expressions.GraftFunctions.register(eo.sparkSession)
-    val splitMod = graft.functions.expressions.FixedPoint.SplitMod
-    val zeros = verts.select(col("vertex"), lit(0L).as("u"),
-      lit(null).cast("decimal(38,18)").as("wbig"))
+    val zeros = verts.select(col("vertex"), lit(0.0).as("w"))
     // The loop builds ONE lazy plan across up to `pageRankFuseDepth`
     // supersteps before materializing (unlike BFS, whose unbounded
     // frontier loop must checkpoint per level): the fused segment runs
@@ -1013,17 +1023,9 @@ object Traversals {
     var r = verts.withColumn("rank", lit(1.0))
     var prevSeg: Option[DataFrame] = None
     (1 to iters).foreach { i =>
-      // Per-edge contribution as a PRIMITIVE fixed-point long (exact
-      // binary value rounded half-up at 1e-18 — see FixedPoint's value
-      // contract), split hi/lo so per-vertex partial sums stay exact
-      // without 128-bit state: the superstep's hash agg is then pure
-      // Tungsten long addition instead of a decimal(38,18) sum whose
-      // every add allocates BigDecimals (r13: 9–28 s of task GC in the
-      // big superstep stages was this allocation pressure). The rare
-      // |w| ≥ 9 contribution (a rank ≥ 9·odeg hub) falls back to the
-      // exact decimal cast and is recombined exactly per vertex.
-      // Join strategy pinned to shuffled-hash with the RANK side as
-      // the build (guide §3.1): the planner's default sort-merge
+      // Per-edge contributions sum through [[fixedPointSum]]. Join
+      // strategy pinned to shuffled-hash with the RANK side as the
+      // build (guide §3.1): the planner's default sort-merge
       // re-sorts the big cached edge table EVERY superstep (the cache
       // is hash-partitioned on src but unsorted), which the r21 probe
       // measured at ~3.7x the whole superstep cost (2.6 s SMJ vs
@@ -1036,18 +1038,8 @@ object Traversals {
       val contrib = eo.join(rh, eo("src") === rh("vertex"))
         .select(eo("dst").as("vertex"),
           (col("rank") / col("odeg")).as("w"))
-        .select(col("vertex"), expr("fixed18(w)").as("u"), col("w"))
-        .select(col("vertex"), col("u"),
-          when(col("u").isNull && col("w").isNotNull,
-            col("w").cast("decimal(38,18)")).as("wbig"))
-      r = contrib.union(zeros)
-        .groupBy("vertex")
-        .agg(sum(expr(s"u div $splitMod")).as("shi"),
-             sum(expr(s"u % $splitMod")).as("slo"),
-             sum(col("wbig")).as("sbig"))
-        .select(col("vertex"),
-          (lit(reset) + lit(1 - reset) *
-            expr("fixed_combine(shi, slo, sbig)")).as("rank"))
+      r = fixedPointSum(contrib.union(zeros), "vertex")
+        .select(col("vertex"), (lit(reset) + lit(1 - reset) * col("m")).as("rank"))
       if (i % pageRankFuseDepth == 0 && i < iters) {
         r = phase(s"supersteps_to_$i") { r.checkpointSized() }
         prevSeg.foreach(dropCheckpoint(_, keep = checkpointRddIds(r)))
@@ -1105,21 +1097,13 @@ object Traversals {
       while (best > dF + dB && nf > 0 && nb > 0 && dF + dB < 2L * maxLevels) {
         if (nf <= nb) {
           dF += 1
-          val f = if (nf <= broadcastFrontierMax) ff.hint("broadcast") else ff
-          val next = f.join(e, f("vertex") === e("src"))
-            .select(e("dst").as("vertex")).distinct()
-            .join(vf, Seq("vertex"), "left_anti")
-            .checkpointSized()
+          val next = expandFrontier(e, ff, nf, vf)
           nf = next.count()
           if (nf > 0) { vf = vf.union(next.select(col("vertex"), lit(dF).as("df"))); ff = next }
           else dropCheckpoint(next)
         } else {
           dB += 1
-          val f = if (nb <= broadcastFrontierMax) fb.hint("broadcast") else fb
-          val next = f.join(er, f("vertex") === er("src"))
-            .select(er("dst").as("vertex")).distinct()
-            .join(vb, Seq("vertex"), "left_anti")
-            .checkpointSized()
+          val next = expandFrontier(er, fb, nb, vb)
           nb = next.count()
           if (nb > 0) { vb = vb.union(next.select(col("vertex"), lit(dB).as("db"))); fb = next }
           else dropCheckpoint(next)
@@ -1148,34 +1132,14 @@ object Traversals {
   def personalizedPageRank(edges: DataFrame, seeds: Seq[Long], iters: Int = 10,
                            reset: Double = 0.15): DataFrame = {
     require(seeds.nonEmpty, "personalized PageRank needs at least one seed")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val outDeg = e.groupBy("src").agg(count(lit(1)).cast("double").as("odeg"))
-    val verts = e.select(col("src").as("vertex"))
-      .union(e.select(col("dst").as("vertex"))).distinct()
-      .checkpointSized()
-    val eo = e.join(outDeg, "src").repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val eo = pageRankEdgeTable(edges)
+    val verts = edgeTableVertices(eo)
     val isSeed = col("vertex").isInCollection(seeds)
     var r = verts.withColumn("rank", when(isSeed, lit(1.0)).otherwise(lit(0.0)))
       .checkpointSized()
-    graft.functions.expressions.GraftFunctions.register(eo.sparkSession)
-    val splitModP = graft.functions.expressions.FixedPoint.SplitMod
     (1 to iters).foreach { _ =>
-      val sums = eo.join(r, eo("src") === r("vertex"))
-        .select(eo("dst"), (col("rank") / col("odeg")).as("w"))
-        .select(col("dst"), expr("fixed18(w)").as("u"), col("w"))
-        .select(col("dst"), col("u"),
-          when(col("u").isNull && col("w").isNotNull,
-            col("w").cast("decimal(38,18)")).as("wbig"))
-        .groupBy(col("dst").as("vertex"))
-        .agg(sum(expr(s"u div $splitModP")).as("shi"),
-             sum(expr(s"u % $splitModP")).as("slo"),
-             sum(col("wbig")).as("sbig"))
-        // coalesce: a group whose every contribution took the decimal
-        // fallback leaves the long sums NULL
-        .select(col("vertex"),
-          expr("fixed_combine(coalesce(shi, 0L), coalesce(slo, 0L), sbig)").as("m"))
+      val sums = fixedPointSum(eo.join(r, eo("src") === r("vertex"))
+        .select(eo("dst").as("vertex"), (col("rank") / col("odeg")).as("w")), "vertex")
       val prev = r
       r = verts.join(sums, Seq("vertex"), "left_outer")
         .select(col("vertex"),
@@ -1184,7 +1148,6 @@ object Traversals {
         .checkpointSized()
       dropCheckpoint(prev)
     }
-    e.unpersist(blocking = false)
     eo.unpersist(blocking = false)
     dropCheckpoint(verts, keep = checkpointRddIds(r))
     r
@@ -1208,36 +1171,19 @@ object Traversals {
     require(seeds.nonEmpty, "batch PPR needs at least one seed")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val outDeg = e.groupBy("src").agg(count(lit(1)).cast("double").as("odeg"))
-    val verts = e.select(col("src").as("vertex"))
-      .union(e.select(col("dst").as("vertex"))).distinct()
-      .checkpointSized()
-    val eo = e.join(outDeg, "src").repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val eo = pageRankEdgeTable(edges)
+    val verts = edgeTableVertices(eo)
     val seedDf = seeds.distinct.toDF("seed")
     val spine = verts.crossJoin(broadcast(seedDf))
-    graft.functions.expressions.GraftFunctions.register(spark)
-    val splitModB = graft.functions.expressions.FixedPoint.SplitMod
     var r = spine
       .select(col("seed"), col("vertex"),
         when(col("vertex") === col("seed"), lit(1.0))
           .otherwise(lit(0.0)).as("rank"))
       .checkpointSized()
     (1 to iters).foreach { _ =>
-      val sums = eo.join(r, eo("src") === r("vertex"))
-        .select(col("seed"), eo("dst"), (col("rank") / col("odeg")).as("w"))
-        .select(col("seed"), col("dst"), expr("fixed18(w)").as("u"), col("w"))
-        .select(col("seed"), col("dst"), col("u"),
-          when(col("u").isNull && col("w").isNotNull,
-            col("w").cast("decimal(38,18)")).as("wbig"))
-        .groupBy(col("seed"), col("dst").as("vertex"))
-        .agg(sum(expr(s"u div $splitModB")).as("shi"),
-             sum(expr(s"u % $splitModB")).as("slo"),
-             sum(col("wbig")).as("sbig"))
-        .select(col("seed"), col("vertex"),
-          expr("fixed_combine(coalesce(shi, 0L), coalesce(slo, 0L), sbig)").as("m"))
+      val sums = fixedPointSum(eo.join(r, eo("src") === r("vertex"))
+        .select(col("seed"), eo("dst").as("vertex"), (col("rank") / col("odeg")).as("w")),
+        "seed", "vertex")
       val prev = r
       r = spine.join(sums, Seq("seed", "vertex"), "left_outer")
         .select(col("seed"), col("vertex"),
@@ -1246,7 +1192,6 @@ object Traversals {
         .checkpointSized()
       dropCheckpoint(prev)
     }
-    e.unpersist(blocking = false)
     eo.unpersist(blocking = false)
     dropCheckpoint(verts, keep = checkpointRddIds(r))
     r
@@ -1264,15 +1209,6 @@ object Traversals {
         struct(col("dst").as("src"), col("src").as("dst")))).as("p"))
       .select(col("p.src").as("src"), col("p.dst").as("dst")).distinct()
 
-  /** k-core decomposition by iterative peeling: repeatedly drop
-    * vertices whose (undirected) degree is below `k` until the edge set
-    * is stable; returns the vertices of the k-core — the maximal
-    * subgraph where every vertex keeps degree ≥ k. Each peel round is
-    * one degree hash-agg plus two semi-join-shaped filters, all keyed
-    * on vertex id (same partitioning reused), so a round costs O(|E|)
-    * shuffled once; rounds = peel depth (bounded by the degeneracy
-    * ordering, usually shallow on real graphs). Input `(src, dst)`
-    * directed pairs, treated as undirected. Output `(vertex: Long)`. */
   /** Bounded Luby maximal-independent-set rounds (Luby 1986) — the
     * classic symmetry-breaking primitive distributed graph systems are
     * built on (coloring, scheduling, parallel matching all reduce to
@@ -1371,6 +1307,15 @@ object Traversals {
     out
   }
 
+  /** k-core decomposition by iterative peeling: repeatedly drop
+    * vertices whose (undirected) degree is below `k` until the edge set
+    * is stable; returns the vertices of the k-core — the maximal
+    * subgraph where every vertex keeps degree ≥ k. Each peel round is
+    * one degree hash-agg plus two semi-join-shaped filters, all keyed
+    * on vertex id (same partitioning reused), so a round costs O(|E|)
+    * shuffled once; rounds = peel depth (bounded by the degeneracy
+    * ordering, usually shallow on real graphs). Input `(src, dst)`
+    * directed pairs, treated as undirected. Output `(vertex: Long)`. */
   def kcore(edges: DataFrame, k: Int, maxIters: Int = 10000): DataFrame = {
     // self-loops don't count toward coreness
     var cur = symmetrize(edges.where(col("src") =!= col("dst")))
@@ -1406,7 +1351,7 @@ object Traversals {
     * component = min vertex id; edges treated as undirected. */
   def connectedComponents(edges: DataFrame, maxIters: Int = 10000,
                           jumps: Int = 2,
-                          localMaxEdges: Long = 65536L): DataFrame = {
+                          localMaxEdges: Long = GraphAlgos.denseLocalMaxEdges): DataFrame = {
     val sym = symmetrize(edges)
       .persist(StorageLevel.MEMORY_AND_DISK) // reused every round
     // Small-graph fast path (same bounded-collect contract as
@@ -1530,7 +1475,7 @@ object Traversals {
     * density regime DBSCAN core graphs live in. */
   def contractedComponents(edges: DataFrame, rounds: Int = 2,
                            maxIters: Int = 10000, jumps: Int = 2,
-                           localMaxEdges: Long = 65536L): DataFrame = {
+                           localMaxEdges: Long = GraphAlgos.denseLocalMaxEdges): DataFrame = {
     var cur = symmetrize(edges).checkpointSized() // (src, dst), both orders
     // below the union-find collect bound, contraction is pure overhead
     // (two agg+join rounds to shrink a graph union-find already eats
@@ -1647,10 +1592,8 @@ object Traversals {
     * as a DataFrame — the set-source sibling of [[bfsLevels]] for
     * callers whose seeds are themselves a distributed result (e.g.
     * the bow-tie decomposition's core SCC) and must never transit the
-    * driver. Level-synchronous frontier loop: each superstep is one
-    * src-keyed equi-join + left-anti against the visited set, both
-    * checkpoint-reaped, so state per superstep is (frontier ∪
-    * visited) and the edge cache is shared across supersteps via
+    * driver. The [[frontierLevels]] loop with the levels projected
+    * away; the edge cache is shared across supersteps via
     * [[partitionEdges]]. Output: one `vertex` column, seeds included.
     * Reverse the edge columns at the call site for reaches-TO-set. */
   def reachableFrom(edges: DataFrame, seeds: DataFrame,
@@ -1665,40 +1608,14 @@ object Traversals {
       if (e.count() <= bfsLocalMaxEdges) {
         val spark = e.sparkSession
         import spark.implicits._
-        val adj = e.select(col("src").cast("long"), col("dst").cast("long"))
-          .as[(Long, Long)].collect()
-          .groupBy(_._1).map { case (a, xs) => a -> xs.map(_._2) }
-        val sd = seeds.select(col("vertex").cast("long")).as[Long]
-          .collect().distinct
-        val seen = scala.collection.mutable.LinkedHashSet[Long](sd: _*)
-        var frontier: Seq[Long] = sd.toSeq
-        while (frontier.nonEmpty) {
-          frontier = frontier.flatMap(v => adj.getOrElse(v, Array.empty[Long]))
-            .distinct.filterNot(seen.contains)
-          seen ++= frontier
-        }
-        return seen.toSeq.toDF("vertex")
+        val raw = collectEdges(e)
+        val sd = seeds.select(col("vertex").cast("long")).as[Long].collect()
+        return localBfs(raw, sd.toSeq, maxIters).keys.toSeq.toDF("vertex")
       }
-      var visited = seeds.select(col("vertex").cast("long").as("vertex"))
-        .distinct().checkpointSized()
-      var frontier = visited
-      var n = frontier.count()
-      var it = 0
-      while (n > 0 && it < maxIters) {
-        it += 1
-        val next = e.join(frontier.select(col("vertex").as("src")), "src")
-          .select(col("dst").as("vertex")).distinct()
-          .join(visited, Seq("vertex"), "left_anti")
-          .checkpointSized()
-        val prevVisited = visited
-        visited = visited.union(next).checkpointSized()
-        if (it > 1) dropCheckpoint(frontier)
-        dropCheckpoint(prevVisited)
-        frontier = next
-        n = next.count()
-      }
-      if (it > 0) dropCheckpoint(frontier)
-      visited
+      val s = seeds.select(col("vertex").cast("long").as("vertex")).distinct()
+        .select(col("vertex"), lit(0).as("level"))
+        .checkpointSized()
+      frontierLevels(e, s, s.count(), maxIters).select("vertex")
     } finally e.unpersist(blocking = false)
   }
 
